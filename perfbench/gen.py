@@ -20,17 +20,26 @@ import pyarrow.parquet as pq
 BID_ROW_GROUP = 4096
 
 
-def bid_table(rng: np.random.Generator, n_tenders: int,
-              min_bids: int = 20, max_bids: int = 2000) -> pd.DataFrame:
-    """One row per bid; tender sizes log-uniform over ``[min_bids, max_bids]``.
+def tender_sizes(n_tenders: int, min_bids: int = 20,
+                 max_bids: int = 2000) -> np.ndarray:
+    """Bids per tender: the ``n_tenders`` quantiles of a log-uniform size
+    over ``[min_bids, max_bids]``, in golden-ratio order, so that any run of
+    consecutive tenders spreads evenly over the range. They do not depend
+    on the seed: every seed scores tenders of the same sizes in one order.
+    """
+    u = (np.arange(n_tenders) * 0.6180339887498949 + 0.5) % 1.0
+    return np.round(np.exp(np.log(min_bids)
+                           + u * np.log(max_bids / min_bids))).astype(np.int64)
+
+
+def bid_table(rng: np.random.Generator, n_tenders: int) -> pd.DataFrame:
+    """One row per bid, tender ``i`` with ``tender_sizes(n_tenders)[i]`` bids.
 
     Columns are continuous where a criterion reads them through statistics
     (price, warranty), so exact score ties inside a tender are vanishingly
     rare and rankings compare exactly across engines.
     """
-    sizes = np.exp(rng.uniform(np.log(min_bids), np.log(max_bids + 1),
-                               n_tenders)).astype(np.int64)
-    sizes = np.clip(sizes, min_bids, max_bids)
+    sizes = tender_sizes(n_tenders)
     tender = np.repeat(np.arange(n_tenders, dtype=np.int32), sizes)
     n = int(sizes.sum())
     base = np.exp(rng.uniform(np.log(5e4), np.log(5e6), n_tenders))[tender]

@@ -23,13 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-#: driver (and, in local mode, executor) heap: enough for both workloads'
-#: working sets. It is committed and touched at start (-Xms, AlwaysPreTouch)
-#: so that peak RSS does not swing with how far the collector happened to
-#: grow the heap in a run.
-DRIVER_MEM = "2g"
-
-E2E_UNITS = {"setup_s": "s", "peak_rss_mb": "MB", "pass_s": "s"}
+E2E_UNITS = {"setup_s": "s", "pass_s": "s"}
 
 #: the named per-op metrics each workload prints; in a traced run they are
 #: per-layer metrics (0 on the workload that does not run the op)
@@ -77,6 +71,7 @@ def per_layer_units() -> dict:
                   "spark.leaked_persists": "count"})
     units.update({name: unit for _, name, unit in SUBSTRATE})
     units["spark.core_util"] = "ratio"
+    units.update({"peak_rss_mb": "MB", "jvm.heap_peak_mb": "MB"})
     units.update(NAMED_UNITS)
     units.update({"traced.pass_s": "s", "trace.self_ms": "ms"})
     return units
@@ -93,7 +88,6 @@ def _configure_env(work: str, nproc: int, trace: bool) -> None:
     for k in [k for k in os.environ if k.startswith("SPARK_GRAFT_")]:
         del os.environ[k]
     os.environ["SPARK_GRAFT_CPUS"] = str(nproc)
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     tmp = os.path.join(work, "tmp")
     os.environ["TMPDIR"] = tmp
     os.environ["SPARK_LOCAL_DIRS"] = os.path.join(work, "local")
@@ -104,8 +98,7 @@ def _configure_env(work: str, nproc: int, trace: bool) -> None:
                  "spark.ui.retainedStages=1000000"]
     args = [a for c in conf for a in ("--conf", c)]
     args += ["--driver-java-options",
-             f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData -Xms{DRIVER_MEM} "
-             "-XX:+AlwaysPreTouch", "pyspark-shell"]
+             f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData", "pyspark-shell"]
     os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
         f"'{a}'" if " " in a else a for a in args)
 
@@ -211,8 +204,7 @@ def main(argv=None) -> int:
             ctx = Context(spark, tracer, args.seed, args.seconds, work, nproc)
             t1 = time.perf_counter()
             e2e = {"pass_s": WORKLOADS[args.workload](ctx),
-                   "setup_s": start_s + (ctx.setup_end - t1),
-                   "peak_rss_mb": ctx.peak_rss["total"]}
+                   "setup_s": start_s + (ctx.setup_end - t1)}
             tracer.harvest()
             record = {
                 "workload": args.workload, "seed": args.seed,

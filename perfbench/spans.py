@@ -84,6 +84,21 @@ def tree_peak_rss_mb(root: int) -> Dict[str, float]:
     return out
 
 
+def jvm_heap_peak_mb(spark, reset: bool = False) -> float:
+    """Sum over the JVM's heap pools (eden, survivor, old) of each pool's
+    peak use since its last reset, in MB. With ``reset``, restart every
+    pool's peak from its current use instead and return 0."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    total = 0
+    for pool in mf.getMemoryPoolMXBeans():
+        if pool.getType().toString() == "Heap memory":
+            if reset:
+                pool.resetPeakUsage()
+            else:
+                total += pool.getPeakUsage().getUsed()
+    return total / _MB
+
+
 def cpu_ticks() -> List[int]:
     """The machine-wide ``cpu`` line of ``/proc/stat``."""
     with open("/proc/stat") as fh:

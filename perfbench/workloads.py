@@ -2,10 +2,10 @@
 
 A workload generates its inputs from the run's seed, then warms every op
 kind with a fixed amount of work, run on ``nproc`` client threads so the JVM
-and the Python workers warm in less wall time (counted in ``setup_s``). The
-timed phase then runs one op at a time for at least the requested seconds,
-sweeping cached frames after every op. Outputs are checked outside the
-timed spans; a mismatch counts as a failed op.
+warms in less wall time (counted in ``setup_s``). The timed phase then runs
+one op at a time for the requested seconds, sweeping cached frames after
+every op. Outputs are checked outside the timed spans; a mismatch, or a
+persist left behind by an op, counts as a failed op.
 """
 
 from __future__ import annotations
@@ -23,14 +23,8 @@ from pyspark.sql import functions as F
 
 import gen
 import scoring
-from spans import (Tracer, cpu_ticks, reset_peak_rss, steal_pct,
-                   tree_peak_rss_mb)
-
-
-#: an op that ran while the hypervisor gave more than this share of the CPU
-#: to other guests measured the neighbours, not the engine: its time is left
-#: out of the medians when the run has quiet ops of the same kind
-STEAL_LIMIT_PCT = 3.0
+from spans import (Tracer, cpu_ticks, jvm_heap_peak_mb, reset_peak_rss,
+                   steal_pct, tree_peak_rss_mb)
 
 
 class Context:
@@ -55,7 +49,7 @@ class Context:
         self.steal_pct = 0.0
         self.sizes: Dict[str, int] = {}
         self.info: Dict[str, tuple] = {}  # name -> (value, unit)
-        self.op_walls: List[tuple] = []  # (kind, ms, steal %) per timed op
+        self.op_walls: List[tuple] = []  # (kind, ms) per timed op
 
     def attempt(self) -> int:
         with self._lock:
@@ -70,35 +64,29 @@ class Context:
 
     @contextmanager
     def op_span(self, tr: Tracer, kind: str):
-        """Root span of one op. A timed op keeps its wall time and the
-        host's CPU steal while it ran (warm-up ops keep neither)."""
-        ticks = cpu_ticks()
+        """Root span of one op; a timed op keeps its wall time."""
         with tr.span(f"op.{kind}", op=self.attempt()) as rec:
             yield rec
         if tr is self.tracer:
-            self.op_walls.append((kind, Tracer.wall_ms(rec),
-                                  steal_pct(ticks, cpu_ticks())))
+            self.op_walls.append((kind, Tracer.wall_ms(rec)))
 
     def walls(self, kind: str) -> List[float]:
-        """Wall times of ``kind``'s timed ops that ran while the hypervisor
-        took at most STEAL_LIMIT_PCT of the CPU; all of them if none did."""
-        ops = [(ms, st) for k, ms, st in self.op_walls if k == kind]
-        quiet = [ms for ms, st in ops if st <= STEAL_LIMIT_PCT]
-        return quiet or [ms for ms, _ in ops]
+        """Wall times of ``kind``'s timed ops."""
+        return [ms for k, ms in self.op_walls if k == kind]
 
     def pass_s(self, kinds: List[str]) -> float:
         """Seconds for one pass of ``kinds``, each op at its kind's median
         latency; also records the median latency over all timed ops."""
         self.info["op_p50_ms"] = (
-            statistics.median(sum((self.walls(k) for k in set(kinds)), [])),
-            "ms")
-        self.info["steal_excluded_ops"] = (
-            sum(st > STEAL_LIMIT_PCT for _, _, st in self.op_walls), "count")
+            statistics.median(ms for _, ms in self.op_walls), "ms")
         return sum(statistics.median(self.walls(k)) for k in kinds) / 1e3
 
-    def sweep(self, tr: Tracer) -> None:
-        """Release every tracked persist, then count persistent RDDs that
-        survive the sweep; drop those too so they cannot skew later ops."""
+    def sweep(self, tr: Tracer, after: str) -> None:
+        """Release every tracked persist, then count the persistent RDDs
+        that survive the sweep. A survivor is a persist the op left behind
+        that ``release_all()`` cannot reach: the op after which it was
+        found counts as failed, and the survivor is dropped so it cannot
+        skew later ops."""
         from bid_evaluation_spark.operators import cache
 
         tracked = len(cache._ALL_CACHED)
@@ -107,6 +95,8 @@ class Context:
         leaked = self.spark.sparkContext._jsc.getPersistentRDDs().size()
         self.sweeps.append((tr is self.tracer, tracked, leaked))
         if leaked:
+            self.fail(f"{after}: {leaked} persist(s) left after "
+                      "release_all()")
             self.spark.catalog.clearCache()
 
     def warm_up(self, tasks: List[Callable[[Tracer], None]]) -> None:
@@ -116,41 +106,40 @@ class Context:
         with ThreadPoolExecutor(self.nproc) as pool:
             for fut in [pool.submit(task, warm) for task in tasks]:
                 fut.result()
-        self.sweep(warm)
+        self.sweep(warm, "warm-up")
 
     def timed_loop(self, step: Callable[[Tracer], None]) -> None:
-        """Call ``step`` until ``seconds`` of wall time have passed and at
-        least half the timed ops were quiet (CPU steal within
-        STEAL_LIMIT_PCT), or until twice ``seconds`` have passed. Set-up
+        """Call ``step`` until ``seconds`` of wall time have passed. Set-up
         ends where this starts. Peak memory covers the timed ops only: it is
         reset as timing starts and read as it stops, before any oracle work
         in the driver can raise it."""
         reset_peak_rss(os.getpid())
+        jvm_heap_peak_mb(self.spark, reset=True)
         ticks = cpu_ticks()
         self.setup_end = t0 = time.perf_counter()
-        while True:
+        while time.perf_counter() - t0 < self.seconds:
             step(self.tracer)
-            elapsed = time.perf_counter() - t0
-            quiet = sum(st <= STEAL_LIMIT_PCT for _, _, st in self.op_walls)
-            if elapsed >= self.seconds and (2 * quiet >= len(self.op_walls)
-                                            or elapsed >= 2 * self.seconds):
-                break
         self.peak_rss = tree_peak_rss_mb(os.getpid())
         self.steal_pct = steal_pct(ticks, cpu_ticks())
+        self.info["peak_rss_mb"] = (self.peak_rss["total"], "MB")
+        self.info["jvm.heap_peak_mb"] = (jvm_heap_peak_mb(self.spark), "MB")
 
 
 # --- tender_whatif -----------------------------------------------------------
 
 N_TENDERS = 300
-#: warm-up sessions before timing, run on nproc threads (run one at a time,
-#: op latency stopped falling after ~30 ops; warmer starts cost set-up time)
-TENDER_WARMUP_SESSIONS = 7
+#: warm-up sessions (3 ops each) before timing, run on nproc threads. From a
+#: cold JVM, op latency fell for ~120 ops run one at a time (1.4 s to
+#: 0.64 s on 4 cores); 72 ops on 4 threads (~36 s) left the timed ops flat.
+TENDER_WARMUP_SESSIONS = 24
 
 
 def tender_whatif(ctx: Context) -> float:
     """An analyst's session on one tender: a fresh evaluation, then two
     what-if re-evaluations with moved weights that reuse the fresh op's
-    frame, so two of every three ops share their input with the op before."""
+    frame, so two of every three ops share their input with the op before.
+    Sessions walk the tenders in id order, so every seed times the same
+    tender sizes; the seed sets the bids and the what-if weights."""
     from bid_evaluation_spark.sources.io import load_table
 
     spark = ctx.spark
@@ -158,7 +147,7 @@ def tender_whatif(ctx: Context) -> float:
     gen.write_bids(bids, os.path.join(ctx.work, "bids.parquet"))
     ctx.sizes.update(bids=len(bids), tenders=N_TENDERS)
     by_tender = dict(tuple(bids.groupby("tender_id")))
-    order = iter(ctx.rng.permutation(N_TENDERS).tolist())
+    order = iter(range(N_TENDERS))
     base = {c: w for c, (_, w) in scoring.CRITERIA.items()}
 
     def op(tr: Tracer, kind: str, tender: int, df, weights):
@@ -185,10 +174,10 @@ def tender_whatif(ctx: Context) -> float:
             df = op(tr, "fresh", tender, None, base)
             for weights in whatifs:
                 if sweep:
-                    ctx.sweep(tr)
+                    ctx.sweep(tr, f"tender {tender}")
                 op(tr, "whatif", tender, df, weights)
             if sweep:
-                ctx.sweep(tr)
+                ctx.sweep(tr, f"tender {tender}")
         return run
 
     ctx.warm_up([session(False) for _ in range(TENDER_WARMUP_SESSIONS)])
@@ -258,7 +247,7 @@ def registry_mix(ctx: Context) -> float:
     def one_pass(tr: Tracer) -> None:
         for q in order:
             op(q)(tr)
-            ctx.sweep(tr)
+            ctx.sweep(tr, q)
 
     normalize = _oracle_normalize()
     expected: Dict[str, list] = {}
