@@ -10,6 +10,7 @@ persist left behind by an op, counts as a failed op.
 
 from __future__ import annotations
 
+import itertools
 import os
 import statistics
 import threading
@@ -108,17 +109,20 @@ class Context:
                 fut.result()
         self.sweep(warm, "warm-up")
 
-    def timed_loop(self, step: Callable[[Tracer], None]) -> None:
-        """Call ``step`` until ``seconds`` of wall time have passed. Set-up
-        ends where this starts. Peak memory covers the timed ops only: it is
-        reset as timing starts and read as it stops, before any oracle work
-        in the driver can raise it."""
+    def timed_loop(self, step: Callable[[Tracer], None],
+                   min_steps: int = 1) -> None:
+        """Call ``step`` until ``seconds`` of wall time have passed, and at
+        least ``min_steps`` times. Set-up ends where this starts. Peak memory
+        covers the timed ops only: it is reset as timing starts and read as
+        it stops, before any oracle work in the driver can raise it."""
         reset_peak_rss(os.getpid())
         jvm_heap_peak_mb(self.spark, reset=True)
         ticks = cpu_ticks()
         self.setup_end = t0 = time.perf_counter()
-        while time.perf_counter() - t0 < self.seconds:
+        steps = 0
+        while steps < min_steps or time.perf_counter() - t0 < self.seconds:
             step(self.tracer)
+            steps += 1
         self.peak_rss = tree_peak_rss_mb(os.getpid())
         self.steal_pct = steal_pct(ticks, cpu_ticks())
         self.info["peak_rss_mb"] = (self.peak_rss["total"], "MB")
@@ -196,8 +200,10 @@ def tender_whatif(ctx: Context) -> float:
 REGISTRY_FAMILIES = {
     "dedup_s": ("dedup_incremental_minhash_documents",
                 "pipe_decontaminate_documents", "dsir_sample_documents"),
-    "similarity_s": ("ann_cosine_topk_embeddings", "rec_item_cosine_lineitem",
-                     "classify_nb_lang_documents"),
+    # classify_nb_lang_documents is left out: every call leaves its NB
+    # model table persisted where release_all() cannot reach it, so each
+    # call would fail the persist check (see README.md)
+    "similarity_s": ("ann_cosine_topk_embeddings", "rec_item_cosine_lineitem"),
     "graph_ts_s": ("graph_kcore_lineitem", "ts_acf_events", "ts_ewma_events",
                    "analytics_pareto_part"),
     # StagedEvaluator (per-stage persist, top-n window, release) reached
@@ -205,6 +211,11 @@ REGISTRY_FAMILIES = {
     "staged_s": ("staged_topn_exclude_part",),
 }
 REGISTRY_QUERIES = tuple(q for qs in REGISTRY_FAMILIES.values() for q in qs)
+#: warm-up passes before timing, run on nproc threads. After one such pass
+#: the timed passes took 12.9, 9.6, 9.7 and then 8.2-8.8 s on 4 cores, and a
+#: query ran up to 40% slower early in the seeded order than late in it.
+#: After three, the first timed pass was within 10% of the later ones.
+REGISTRY_WARMUP_PASSES = 3
 
 
 def _oracle_normalize():
@@ -219,9 +230,10 @@ def _oracle_normalize():
 
 
 def registry_mix(ctx: Context) -> float:
-    """The registry queries in a seeded order, one pass after another. The
-    warm-up runs one pass concurrently on the same tables, beside the DuckDB
-    oracles whose results the timed pass is checked against."""
+    """The registry queries in a seeded order, cycled one query at a time;
+    the timed phase covers at least one whole pass. The warm-up runs its
+    passes concurrently on the same tables, beside the DuckDB oracles that
+    each query's first timed result is checked against."""
     import duckdb
 
     import __spark_entry__ as entry
@@ -244,10 +256,12 @@ def registry_mix(ctx: Context) -> float:
                 checked[q] = (res.columns, [tuple(r) for r in rows])
         return run
 
-    def one_pass(tr: Tracer) -> None:
-        for q in order:
-            op(q)(tr)
-            ctx.sweep(tr, q)
+    queue = itertools.cycle(order)
+
+    def next_op(tr: Tracer) -> None:
+        q = next(queue)
+        op(q)(tr)
+        ctx.sweep(tr, q)
 
     normalize = _oracle_normalize()
     expected: Dict[str, list] = {}
@@ -267,8 +281,9 @@ def registry_mix(ctx: Context) -> float:
         finally:
             con.close()
 
-    ctx.warm_up([oracle] + [op(q) for q in order])
-    ctx.timed_loop(one_pass)
+    ctx.warm_up([oracle] + [op(q) for _ in range(REGISTRY_WARMUP_PASSES)
+                            for q in order])
+    ctx.timed_loop(next_op, min_steps=len(order))
 
     for q, (cols, rows) in checked.items():
         if normalize(rows, cols) != expected[q]:
