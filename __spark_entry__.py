@@ -2895,7 +2895,7 @@ FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id
 #: for minhash). The parity guarantee is UNCHANGED on the sample — same
 #: operators, same thresholds, same hash-equality gate. The FULL-corpus
 #: variants remain available via deep_queries() and run once per round
-#: through tools/deep_gate.py.
+#: through ``tools/check_oracle.py --deep``.
 _DOCS_SAMPLE_MOD = 3
 
 
@@ -18553,8 +18553,8 @@ def deep_queries() -> dict[str, tuple]:
     registry runs on the doc_id % 3 == 0 sub-corpus (_DOCS_SAMPLE_MOD).
     Same operators, same thresholds — only the sample filter is dropped,
     so the all-pairs DuckDB truth costs n² of the whole corpus. Run once
-    per round via ``tools/deep_gate.py``; not part of ``queries()`` so
-    routine sweeps stay fast."""
+    per round via ``tools/check_oracle.py --deep``; not part of
+    ``queries()`` so routine sweeps stay fast."""
     full = _sample_where(1)
     return {
         "dedup_minhash_candidates_documents_full": (

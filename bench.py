@@ -282,10 +282,8 @@ def bench_audio_curation_documents(spark, sf_dir):
     """Round-11 composition: ONE decode pass (VAD+K-loudness+mel+
     landmarks) → native gates → landmark equi-join dedup → verdict."""
     import __spark_entry__ as e
-    from bid_evaluation_spark.operators.cache import release_all
 
     _force(e.queries()["mm_audio_curation_documents"](spark, sf_dir))
-    release_all()                 # the query persists its manifest
 
 
 def bench_span_removal_documents(spark, sf_dir):
@@ -304,10 +302,8 @@ def bench_media_funnel_documents(spark, sf_dir):
     decode + features) → native gates → linear dHash dedup →
     precedence verdict over a 19-class mixed-payload corpus."""
     import __spark_entry__ as e
-    from bid_evaluation_spark.operators.cache import release_all
 
     _force(e.queries()["pipe_media_funnel_documents"](spark, sf_dir))
-    release_all()                 # the funnel persists its manifest
 
 
 def bench_webp_decode_documents(spark, sf_dir):
@@ -376,6 +372,7 @@ def _calibrate(spark):
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     passes = int(os.environ.get("SPARK_GRAFT_BENCH_PASSES", "3"))
+    from bid_evaluation_spark.operators.cache import release_all
     from bid_evaluation_spark.session import get_spark
     from bid_evaluation_spark.sources.io import TESTDATA_TABLES, load_table
 
@@ -405,12 +402,18 @@ def main():
     # drift that made earlier single-shot cold records non-comparable
     # across rounds; the per-query spread is emitted as the artifact's own
     # noise bound.
+    def timed(name):
+        """Run one bench entry; its persists are released after timing so
+        no cache carries over into the next entry or pass."""
+        t0 = time.time()
+        BENCHES[name](spark, sf_dir)
+        runs[name].append(round(time.time() - t0, 3))
+        release_all()
+
     runs = {name: [] for name in BENCHES}
     for _ in range(max(1, passes)):
-        for name, fn in BENCHES.items():
-            t0 = time.time()
-            fn(spark, sf_dir)
-            runs[name].append(round(time.time() - t0, 3))
+        for name in BENCHES:
+            timed(name)
     # noise taming (r9 verdict task 7): queries whose spread exceeds
     # 2.5x after the base passes get extra warm passes (to 5 total) so
     # the per-query min is a readable round-over-round trend, not a
@@ -420,9 +423,7 @@ def main():
     for name, ts in runs.items():
         if min(ts) > 0 and max(ts) / min(ts) > 2.5:
             for _ in range(5 - len(ts)):
-                t0 = time.time()
-                BENCHES[name](spark, sf_dir)
-                runs[name].append(round(time.time() - t0, 3))
+                timed(name)
             extra_passes[name] = len(runs[name])
     calib_after = _calibrate(spark)
 

@@ -3,10 +3,13 @@
 Reference semantics: ``bid_evaluation/criteria.py`` (six criterion classes that
 transform one pandas Series into weighted 0–100-ish scores). Here each
 criterion is a factory ``(Column, stats) -> Column`` producing a pure Spark
-expression — statistics are pre-computed by one fused aggregation
-(:mod:`..plans.stats`) and inlined as literals, so every criterion's scoring
-stays inside whole-stage codegen. Only :class:`CustomCriterion` (user-supplied
-Python) leaves the JVM, and then via an Arrow-vectorized ``pandas_udf``.
+expression. The stats come from :mod:`..plans.stats` either as Columns
+(window aggregates in the plain evaluator, broadcast-joined per-batch stats
+in the batched one) or as collected literals (custom and fallback-formula
+criteria, partitioned ranking, staged stages); either way every criterion's
+scoring stays inside whole-stage codegen. Only :class:`CustomCriterion`
+(user-supplied Python) leaves the JVM, and then via an Arrow-vectorized
+``pandas_udf``.
 
 Exact-parity notes (verified against the reference by execution — SURVEY §1.4):
 
@@ -40,10 +43,10 @@ import pandas as pd
 from pyspark.sql import Column, functions as F
 from pyspark.sql.functions import pandas_udf
 
-#: statistics may be collected scalars (plain-evaluate: inlined literals that
-#: Catalyst constant-folds) or Columns (batched evaluate: per-batch stats
-#: broadcast-joined back as columns). Criterion expressions are written
-#: uniformly against both.
+#: statistics may be collected scalars (inlined literals that Catalyst
+#: constant-folds) or Columns (plain evaluate: whole-frame window aggregates;
+#: batched evaluate: per-batch stats broadcast-joined back as columns).
+#: Criterion expressions are written uniformly against both.
 Stats = Mapping[str, Any]
 
 
@@ -81,8 +84,9 @@ class CriterionBase(ABC):
         self.name = name
         self.weight = weight
         self.config = config
-        # populated by the evaluator after the stats job, for
-        # get_statistics() parity with reference criteria._statistics
+        # populated by the evaluator from the stats job (in evaluate() or
+        # on the first get_statistics()), for parity with reference
+        # criteria._statistics
         self._statistics: Dict[str, Optional[float]] = {}
 
     @abstractmethod

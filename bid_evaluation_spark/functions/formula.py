@@ -49,6 +49,7 @@ path, now batched instead of the reference's row loop.
 from __future__ import annotations
 
 import ast
+import functools
 
 from typing import Any, Callable, Dict, Mapping, Optional, Tuple
 
@@ -98,9 +99,9 @@ def _ieee_div(a: Column, b: Column) -> Column:
     (ANSI), so the zero-divisor branch is rebuilt from ``a * b**-1``, which
     Java evaluates to the correctly-signed infinity / nan.
     """
-    return F.when(b == F.lit(0.0), a * F.pow(b, F.lit(-1.0))).otherwise(
-        F.try_divide(a, b)
-    )
+    # try_divide is null exactly when b == 0 or an operand is null (then the
+    # fallback is null too); each operand tree appears twice, not 2-3 times
+    return F.coalesce(F.try_divide(a, b), a * F.pow(b, F.lit(-1.0)))
 
 
 def _py_mod(a: Column, b: Column, zero_result: Column) -> Column:
@@ -127,23 +128,35 @@ def _floor_double(d: Column) -> Column:
     ).otherwise(F.floor(d).cast("double"))
 
 
+def _py_min2(acc: Column, x: Column) -> Column:
+    """Python's ``min(acc, x)`` on non-null doubles: ``x`` replaces ``acc``
+    only when strictly smaller, and ``x < nan_acc`` / ``nan_x < acc`` are
+    both IEEE-False. ``least`` keeps its first argument unless a later one
+    is strictly smaller (``-0.0`` ties ``0.0``) and orders NaN greatest,
+    which agrees for the arg side; the acc side needs the guard."""
+    return F.when(F.isnan(acc), acc).otherwise(F.least(acc, x))
+
+
+def _py_max2(acc: Column, x: Column) -> Column:
+    """Python's ``max(acc, x)`` on non-null doubles; here the arg side needs
+    the NaN guard (Spark orders ``nan`` above ``acc``, Python keeps ``acc``),
+    so a NaN ``x`` enters ``greatest`` as ``-inf``, which never replaces."""
+    return F.greatest(acc, F.nanvl(x, F.lit(-_INF)))
+
+
 def _py_min_fold(args: list) -> Column:
-    """Python's ``min(...)`` left fold, NaN order-dependence included:
-    the accumulator survives unless a later arg is strictly smaller, and
-    ``x < nan_acc`` / ``nan_x < acc`` are both IEEE-False (Spark orders NaN
-    greatest, which agrees for the arg side; the acc side needs the guard)."""
+    """Python's ``min(...)`` left fold, NaN order-dependence included."""
     acc = args[0]
     for x in args[1:]:
-        acc = F.when(F.isnan(acc), acc).when(x < acc, x).otherwise(acc)
+        acc = _py_min2(acc, x)
     return _null_strict(acc, *args)
 
 
 def _py_max_fold(args: list) -> Column:
-    """Python's ``max(...)`` left fold (see :func:`_py_min_fold`); here the
-    arg side needs the NaN guard (Spark evaluates ``nan > acc`` as True)."""
+    """Python's ``max(...)`` left fold (see :func:`_py_max2`)."""
     acc = args[0]
     for x in args[1:]:
-        acc = F.when(F.isnan(x), acc).when(x > acc, x).otherwise(acc)
+        acc = _py_max2(acc, x)
     return _null_strict(acc, *args)
 
 
@@ -476,9 +489,7 @@ class _Translator:
                 x, lo, hi = args
                 # py: max(lo, min(hi, x)) — composed from the same folds so
                 # clip(nan, 0, 100) == 100 exactly as the reference computes
-                inner = F.when(F.isnan(hi), hi).when(x < hi, x).otherwise(hi)
-                outer = F.when(F.isnan(inner), lo).when(inner > lo, inner).otherwise(lo)
-                return _null_strict(outer, x, lo, hi), False
+                return _null_strict(_py_max2(lo, _py_min2(hi, x)), x, lo, hi), False
             raise FormulaTranslationError(f"call {fname}/{len(args)}")
 
         raise FormulaTranslationError(f"node {type(node).__name__}")
@@ -726,10 +737,22 @@ def formula_translates(
     ~10-100x slower interpreter path shows up in a coverage-asserting
     test instead of a bench (VERDICT r8 task 6).  Uses representative
     float stats (the five reference stat names) so name resolution
-    matches a real evaluate() call.
+    matches a real evaluate() call. Memoized: the dry run builds the whole
+    expression, one py4j round trip per node.
     """
+    # keyed by value AND type: an int and an np.float64 variable compare
+    # equal but translate differently (python vs numpy ÷0 semantics)
+    key = tuple(sorted((k, type(v), v) for k, v in (variables or {}).items()))
+    try:
+        return _translates(formula, key)
+    except TypeError:  # an unhashable variable value
+        return _translates.__wrapped__(formula, key)
+
+
+@functools.lru_cache(maxsize=1024)
+def _translates(formula: str, variables: tuple) -> bool:
     names: Dict[str, Any] = {k: np.float64(1.0) for k in STAT_NAMES}
-    names.update(variables or {})
+    names.update({k: v for k, _, v in variables})
     try:
         formula_to_column(formula, F.lit(1.0), names)
         return True
@@ -764,11 +787,8 @@ def formula_score_column(
     if not force_udf or has_column_stats:
         try:
             raw = formula_to_column(formula, col, names).cast("double")
-            cleaned = (
-                F.when(raw.isNull(), F.lit(0.0))
-                .when(F.isnan(raw), F.lit(0.0))
-                .otherwise(raw)
-            )
+            # null and NaN → 0.0, reading the (possibly large) raw tree once
+            cleaned = F.nanvl(F.coalesce(raw, F.lit(0.0)), F.lit(0.0))
             return F.least(F.greatest(cleaned, F.lit(0.0)), F.lit(100.0))
         except FormulaTranslationError:
             if has_column_stats:

@@ -25,10 +25,17 @@ _ALL_CACHED: List[DataFrame] = []
 
 def track_cached(result: DataFrame, deps) -> DataFrame:
     """Record persisted intermediates on the returned frame (for
-    :func:`release`) AND in the module registry (for :func:`release_all`)."""
-    deps = list(deps)
-    result._cached_deps = list(getattr(result, "_cached_deps", [])) + deps
-    _ALL_CACHED.extend(deps)
+    :func:`release`) AND in the module registry (for :func:`release_all`).
+
+    Each frame is recorded once per list (by identity), so an operator that
+    forwards a helper's deps onto its own result does not duplicate them."""
+    own = list(getattr(result, "_cached_deps", []))
+    for dep in deps:
+        if not any(d is dep for d in own):
+            own.append(dep)
+        if not any(d is dep for d in _ALL_CACHED):
+            _ALL_CACHED.append(dep)
+    result._cached_deps = own
     return result
 
 

@@ -38,6 +38,7 @@ from typing import List, Optional
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .cache import track_cached
 from .text import tokens
 
 from bid_evaluation_spark.dispatch import local_cap
@@ -289,7 +290,9 @@ def nb_classify(df: DataFrame, text_col: str = "text",
                      text_col=text_col, label_col=label_col, add_k=add_k,
                      lowercase=lowercase)
     out = nb_predict(df, model, text_col=text_col, id_col=id_col)
-    return out
+    # the persisted model table outlives this call: the returned plan joins
+    # it (or the kernel collected it), so release()/release_all() drop it
+    return track_cached(out, [model.table])
 
 
 # ---------------------------------------------------------------------------

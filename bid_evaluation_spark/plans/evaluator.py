@@ -6,10 +6,14 @@ factories building a ``{column: criterion}`` map, then an eager pandas
 names, same config vocabulary, same error messages) and re-expresses
 ``evaluate`` as a lazy Spark plan:
 
-1. ONE fused statistics aggregation job for every criterion column
-   (the reference runs one pandas pass per criterion — ``evaluator.py:291-295``),
-2. all weighted score columns as literal-parameterized Column expressions in a
-   single projection (``score_{name}`` columns are weight-multiplied
+1. the statistics each criterion reads (``required_stat_keys``) as
+   whole-frame window aggregates (``min/max/avg/stddev_samp`` and one fused
+   ``percentile(c, array(.25,.5,.75))``) over ``Window.partitionBy()`` —
+   they run in the single partition the ``RANK()`` window of step 4 gathers
+   anyway, so ``evaluate()`` itself runs no Spark job (the reference runs
+   one pandas pass per criterion — ``evaluator.py:291-295``),
+2. all weighted score columns as Column expressions over those statistics
+   in a single projection (``score_{name}`` columns are weight-multiplied
    contributions, reference ``evaluator.py:294-295``),
 3. ``final_score = sum(weighted scores) / total_weight`` when
    ``normalize_weights`` (default), else the raw sum (``evaluator.py:299-312``),
@@ -17,8 +21,15 @@ names, same config vocabulary, same error messages) and re-expresses
    pandas ``rank(ascending=False, method='min')`` (``evaluator.py:315-317``),
 5. result ordered by ranking (``evaluator.py:319``).
 
-Catalyst fuses (2)–(3) into one whole-stage-codegen span; the only driver
-round-trip is collecting the 1-row stats (SURVEY §3 lifecycle, §4.2).
+The whole evaluation is one plan with one single-partition exchange, and
+runs only when the caller acts on the result; the statistics helper columns
+are dropped before ranking, so the result schema is unchanged. The bundle
+:meth:`Evaluator.get_statistics` reports costs one fused stats job, run on
+its first call. Where collected stat values are needed — a
+``CustomCriterion`` pandas UDF, a formula on the interpreter fallback, or
+``rank_partition_by`` (no global exchange to ride) — that job runs inside
+``evaluate()`` and the values are inlined as literals (SURVEY §3
+lifecycle, §4.2).
 
 Scale note: a global ``Window.orderBy`` ranks through a single-partition
 exchange — fine for one tender's bid table, wrong for scoring millions of
@@ -47,7 +58,7 @@ from ..functions.criteria import (
     TemplateCriterion,
     ThresholdCriterion,
 )
-from .stats import STAT_KEYS, compute_stats, grouped_stats_df
+from .stats import STAT_KEYS, compute_stats, grouped_stats_df, window_stats
 
 
 class Evaluator:
@@ -63,6 +74,9 @@ class Evaluator:
     def __init__(self, normalize_weights: bool = True):
         self.criteria: Dict[str, CriterionBase] = {}
         self.normalize_weights = normalize_weights
+        # (frame, criteria, keys_by_column, approx) of the last evaluate
+        # until its statistics bundle is collected
+        self._pending_stats: Optional[tuple] = None
 
     # === Factory methods (from config) — reference evaluator.py:34-112 ===
 
@@ -249,21 +263,21 @@ class Evaluator:
             )
         self._check_columns(df)
 
-        stat_cols = list(self.criteria.keys())
-        keys_by_column = None
-        if stats_mode == "required":
-            keys_by_column = {}
-            for column, criterion in self.criteria.items():
-                keys_by_column.setdefault(column, set()).update(
-                    criterion.required_stat_keys
-                )
-        stats = (
-            compute_stats(df, stat_cols, keys_by_column=keys_by_column,
-                          approx_percentiles=approx_percentiles)
-            if stat_cols else {}
-        )
-        for column, criterion in self.criteria.items():
-            criterion._statistics = dict(stats[column])
+        required = {column: set(c.required_stat_keys)
+                    for column, c in self.criteria.items()}
+        keys_by_column = required if stats_mode == "required" else None
+        self._pending_stats = (df, list(self.criteria.items()),
+                               keys_by_column, approx_percentiles)
+        # per-partition ranking has no global single-partition exchange for
+        # window stats to ride, so it keeps the collected-literal route
+        if rank_partition_by is not None or any(
+                _needs_stat_values(c) for c in self.criteria.values()):
+            result, helpers = df, []
+            stats = self._collect_statistics()
+        else:
+            # the collected bundle waits for the first get_statistics()
+            result, stats, helpers = window_stats(
+                df, required, approx_percentiles=approx_percentiles)
 
         score_exprs: Dict[str, Column] = {}
         for column, criterion in self.criteria.items():
@@ -271,7 +285,6 @@ class Evaluator:
                 F.col(column), stats[column]
             )
 
-        result = df
         if include_details and score_exprs:
             result = result.withColumns(score_exprs)
             weighted = [F.col(name) for name in score_exprs]
@@ -279,6 +292,8 @@ class Evaluator:
             weighted = list(score_exprs.values())
 
         result = result.withColumn("final_score", self._final_score_expr(weighted))
+        if helpers:
+            result = result.drop(*helpers)
 
         order = [F.desc("final_score")]
         if rank_partition_by is not None:
@@ -363,13 +378,31 @@ class Evaluator:
     # === Introspection — reference evaluator.py:321-344 ===
 
     def get_statistics(self) -> Dict[str, Dict[str, Any]]:
-        """Statistics computed during the last ``evaluate`` call, keyed by
-        criterion name (reference ``evaluator.py:321-329``)."""
+        """Statistics of the last ``evaluate`` call, keyed by criterion name
+        (reference ``evaluator.py:321-329``).
+
+        When that call read its statistics as window Columns, the first call
+        here runs the one fused stats job over the same input and caches
+        the bundle on the criteria."""
+        if self._pending_stats is not None:
+            self._collect_statistics()
         statistics = {}
         for column, criterion in self.criteria.items():
             if criterion._statistics:
                 statistics[criterion.name] = criterion._statistics
         return statistics
+
+    def _collect_statistics(self) -> Dict[str, Dict[str, Any]]:
+        """Run the pending fused stats job and store each criterion's
+        bundle on it (reference ``criteria._statistics``)."""
+        df, criteria, keys_by_column, approx = self._pending_stats
+        self._pending_stats = None
+        stats = compute_stats(df, [column for column, _ in criteria],
+                              keys_by_column=keys_by_column,
+                              approx_percentiles=approx)
+        for column, criterion in criteria:
+            criterion._statistics = dict(stats[column])
+        return stats
 
     def summary(self) -> pd.DataFrame:
         """Driver-side summary of configured criteria (reference
@@ -385,6 +418,24 @@ class Evaluator:
                 "normalized_weight": criterion.weight / total if total > 0 else 0,
             })
         return pd.DataFrame(data)
+
+
+#: criteria whose expressions accept Column stats (``evaluate_batched``
+#: scores them that way too)
+_COLUMN_STAT_CRITERIA = (
+    BuiltinCustomCriterion, DirectScoreCriterion, LinearCriterion,
+    MinimumRatioCriterion, TemplateCriterion, ThresholdCriterion,
+)
+
+
+def _needs_stat_values(criterion: CriterionBase) -> bool:
+    """Whether ``criterion`` must see collected stat values, not Columns."""
+    if isinstance(criterion, FormulaCriterion):
+        # the pandas-UDF interpreter fallback closes over the stat values
+        return not criterion.translated
+    # a CustomCriterion's pandas UDF closes over the stats dict; criteria
+    # outside this package may do Python arithmetic on the values
+    return not isinstance(criterion, _COLUMN_STAT_CRITERIA)
 
 
 def _apply_custom_batched(df: DataFrame, batch_col: str, items,

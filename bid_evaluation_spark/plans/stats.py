@@ -12,11 +12,12 @@ Spark mapping (SURVEY §2.4-A1, §1.4-17):
 
 Where the reference runs one full pandas pass per criterion (even when two
 criteria read the same column), this engine batches every requested column's
-seven statistics into ONE ``df.agg(...)`` job and collects a single row.
-Collected values are then inlined as literals into the scoring Column
-expressions (SURVEY §4.2: collect-to-literals keeps the whole post-agg scoring
-pipeline inside one whole-stage-codegen span; cost is one driver round-trip per
-evaluation, not per criterion).
+seven statistics into ONE ``df.agg(...)`` job and collects a single row
+(:func:`compute_stats`). The plain evaluator reads its statistics as Columns
+instead: :func:`window_stats` evaluates the same aggregates as whole-frame
+window functions inside the single partition its global ``RANK()`` window
+gathers anyway, so scoring runs no stats job; the collected bundle is
+computed only when :meth:`Evaluator.get_statistics` asks for it.
 
 At scale: the agg is a partial (map-side combined) aggregation over a columnar
 scan that prunes to exactly the requested columns — O(|columns|) state per
@@ -25,9 +26,9 @@ task, no shuffle of row data, a single 1-row exchange.
 
 from __future__ import annotations
 
-from typing import Dict, Iterable, List, Mapping, Optional, Sequence
+from typing import Dict, Iterable, List, Mapping, Optional, Sequence, Tuple
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, WindowSpec, functions as F
 
 from bid_evaluation_spark.dispatch import local_cap
 
@@ -43,16 +44,7 @@ def _stat_exprs(col: Column, prefix: str) -> List[Column]:
     on the stats job at sf0.1). The array is unpacked by ``_unpack_stat_row``
     / :func:`_unpack_select` after the agg.
     """
-    c = col.cast("double")
-    return [
-        F.min(c).alias(f"{prefix}__min"),
-        F.max(c).alias(f"{prefix}__max"),
-        F.avg(c).alias(f"{prefix}__mean"),
-        F.stddev_samp(c).alias(f"{prefix}__std"),
-        F.percentile(
-            c, F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-        ).alias(f"{prefix}__q"),
-    ]
+    return _partial_stat_exprs(col, prefix, set(STAT_KEYS))
 
 
 #: position of each quantile stat inside the fused ``__q`` array
@@ -90,31 +82,42 @@ def _unpack_select(prefix: str) -> List[Column]:
 APPROX_PERCENTILE_ACCURACY = 10000
 
 
-def _partial_stat_exprs(col: Column, prefix: str, keys,
-                        approx: bool = False) -> List[Column]:
-    """Aggregation exprs for just the requested stat keys of one column.
+def _stat_aggs(col: Column, keys, approx: bool = False,
+               window: Optional[WindowSpec] = None) -> Dict[str, Column]:
+    """Unaliased aggregate per requested stat key of one column.
 
-    Any requested quantile still lands in one fused ``percentile(c, array)``
-    (the buffer dominates, extra quantiles inside one agg are marginal).
-    With ``approx``, quantiles use ``percentile_approx`` instead — O(1)
-    sketch state per column instead of buffering every value, the 100-TB
-    path (documented divergence from the reference's pandas-exact
-    quantiles; min/max/mean/std stay exact either way).
+    Any requested quantile lands in one fused ``percentile(c, array)``
+    under the key ``"q"`` (the buffer dominates, extra quantiles inside one
+    agg are marginal). With ``approx``, quantiles use ``percentile_approx``
+    instead — O(1) sketch state per column instead of buffering every
+    value, the 100-TB path (documented divergence from the reference's
+    pandas-exact quantiles; min/max/mean/std stay exact either way). With
+    ``window``, every aggregate is evaluated over that window.
     """
     c = col.cast("double")
-    exprs: List[Column] = []
+    aggs: Dict[str, Column] = {}
     for k, fn in (("min", F.min), ("max", F.max), ("mean", F.avg),
                   ("std", F.stddev_samp)):
         if k in keys:
-            exprs.append(fn(c).alias(f"{prefix}__{k}"))
-    if keys & {"q25", "median", "q75"}:
+            aggs[k] = fn(c)
+    if keys & _Q_IDX.keys():
         qs = F.array(F.lit(0.25), F.lit(0.5), F.lit(0.75))
-        q = (
+        aggs["q"] = (
             F.percentile_approx(c, qs, F.lit(APPROX_PERCENTILE_ACCURACY))
             if approx else F.percentile(c, qs)
         )
-        exprs.append(q.cast("array<double>").alias(f"{prefix}__q"))
-    return exprs
+    if window is not None:
+        aggs = {k: a.over(window) for k, a in aggs.items()}
+    if "q" in aggs:
+        aggs["q"] = aggs["q"].cast("array<double>")
+    return aggs
+
+
+def _partial_stat_exprs(col: Column, prefix: str, keys,
+                        approx: bool = False) -> List[Column]:
+    """Aggregation exprs for just the requested stat keys of one column."""
+    return [a.alias(f"{prefix}__{k}")
+            for k, a in _stat_aggs(col, keys, approx).items()]
 
 
 def compute_stats(
@@ -162,6 +165,39 @@ def compute_stats(
     if with_count:
         out["__count__"] = row["__count__"]
     return out
+
+
+def window_stats(
+    df: DataFrame,
+    keys_by_column: Mapping[str, Iterable[str]],
+    *,
+    approx_percentiles: bool = False,
+) -> Tuple[DataFrame, Dict[str, Dict[str, Column]], List[str]]:
+    """The lazy twin of :func:`compute_stats`: whole-frame window aggregates.
+
+    Adds one helper column per requested aggregate (quantiles fused into
+    one array column, as in the job) evaluated over ``Window.partitionBy()``
+    with an unbounded frame, and returns ``(frame, {column: {stat: Column}},
+    helper names)``. No job runs. The window gathers every row into one
+    partition, so it belongs in plans that need that partition anyway (a
+    global ``RANK()``); drop the helpers once the stats are read.
+    """
+    w = Window.partitionBy().rowsBetween(Window.unboundedPreceding,
+                                         Window.unboundedFollowing)
+    helpers: Dict[str, Column] = {}
+    stats: Dict[str, Dict[str, Column]] = {}
+    for i, (c, keys) in enumerate(keys_by_column.items()):
+        keys = set(keys)
+        prefix = f"__stat{i}"
+        for k, agg in _stat_aggs(F.col(c), keys, approx_percentiles,
+                                 window=w).items():
+            helpers[f"{prefix}__{k}"] = agg
+        stats[c] = {
+            k: (F.col(f"{prefix}__q")[_Q_IDX[k]] if k in _Q_IDX
+                else F.col(f"{prefix}__{k}"))
+            for k in STAT_KEYS if k in keys
+        }
+    return (df.withColumns(helpers) if helpers else df), stats, list(helpers)
 
 
 _STATS_LOCAL_MAX_ROWS = 10_000_000

@@ -294,3 +294,16 @@ def test_knn_classify_majority_and_ties(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         knn_classify(queries, corpus, k=0)
+
+
+def test_nb_classify_model_table_is_released(spark, fruit_docs):
+    from bid_evaluation_spark.operators.cache import release_all
+
+    jsc = spark.sparkContext._jsc
+    release_all()
+    spark.catalog.clearCache()
+    assert jsc.getPersistentRDDs().size() == 0
+    nb_classify(fruit_docs.filter(F.col("cls").isNotNull()),
+                label_col="cls", id_col="doc_id").collect()
+    release_all()
+    assert jsc.getPersistentRDDs().size() == 0

@@ -119,3 +119,18 @@ def test_fused_proxy_matches_unfused_shape(spark):
                               .alias("log_weight")).collect()))
     assert [(d, n, round(w, 10)) for d, n, w in got] == \
         [(d, n, round(w, 10)) for d, n, w in want]
+
+
+def test_sample_tracks_each_persist_once(spark):
+    from bid_evaluation_spark.operators import cache
+
+    cache.release_all()
+    raw, target = _corpora(spark)
+    out = dsir_sample(raw, target, k=2, buckets=512)
+    try:
+        ids = [id(d) for d in cache._ALL_CACHED]
+        assert ids and len(ids) == len(set(ids))
+        own = [id(d) for d in out._cached_deps]
+        assert sorted(own) == sorted(ids)
+    finally:
+        cache.release_all()
